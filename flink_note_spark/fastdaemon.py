@@ -38,7 +38,10 @@ import os
 import sys  # noqa: F401 — pyspark.daemon reads sys.argv at import time
 import zipimport
 
-_orig_invalidate = zipimport.zipimporter.invalidate_caches
+# zipimporter.invalidate_caches exists from Python 3.10 on; without it
+# importlib.invalidate_caches() never re-reads archives, so there is
+# nothing to guard and the stock daemon behaviour is kept.
+_orig_invalidate = getattr(zipimport.zipimporter, "invalidate_caches", None)
 
 
 def _invalidate_if_changed(self):
@@ -54,7 +57,8 @@ def _invalidate_if_changed(self):
         self._graft_zip_stat = key
 
 
-zipimport.zipimporter.invalidate_caches = _invalidate_if_changed
+if _orig_invalidate is not None:
+    zipimport.zipimporter.invalidate_caches = _invalidate_if_changed
 
 # Import AFTER the patch so every worker forked by the daemon inherits
 # it. pyspark/daemon.py resolves the worker module from sys.argv at

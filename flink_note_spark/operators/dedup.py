@@ -523,7 +523,9 @@ class MinhashFrames:
             want["id_col"] = id_col
         if text_col is not None:
             want["text_col"] = text_col
-        have = {k: self.params[k] for k in want}
+        # .get: frames built with a pre-r14 params dict (no column keys)
+        # must surface as the mismatch below, not as a KeyError
+        have = {k: self.params.get(k) for k in want}
         if want != have:
             raise ValueError(
                 f"{caller}: MinhashFrames built with {have}, "

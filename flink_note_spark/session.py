@@ -12,12 +12,15 @@ the 100 TB posture scaled to local mode:
 - shuffle partitions sized to the box, not the 200 default; on a real
   cluster this scales with executor count and AQE coalesces the rest.
 - UTC session timezone so event-time semantics are deployment-independent.
+- codegen cache of 4096 classes, not 100: a registry pass generates ~2,000,
+  and an evicted class is recompiled on every repeated execution.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -62,18 +65,19 @@ def get_spark(
     # every call — measured ~70–90 ms of a ~150–210 ms fixed per-task
     # overhead on EVERY Python stage (see fastdaemon module docstring).
     # Local masters run workers on this machine, so the repo is made
-    # importable to them via PYTHONPATH before the JVM is launched (a
-    # no-op when the JVM already exists — getOrCreate then returns the
-    # running session and the conf below is ignored with it). On a
-    # cluster, ship the package with --py-files and set the conf
+    # importable to them via PYTHONPATH before the JVM is launched. When
+    # a SparkContext is already running, getOrCreate returns it and
+    # ignores the conf below, so the process environment is left alone.
+    # On a cluster, ship the package with --py-files and set the conf
     # explicitly; defaulting it there would break executors that don't
     # have the package.
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pp = os.environ.get("PYTHONPATH", "")
-    if repo_root not in pp.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            repo_root + (os.pathsep + pp if pp else "")
-        )
+    if SparkContext._active_spark_context is None:
+        repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        pp = os.environ.get("PYTHONPATH", "")
+        if repo_root not in pp.split(os.pathsep):
+            os.environ["PYTHONPATH"] = (
+                repo_root + (os.pathsep + pp if pp else "")
+            )
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -87,6 +91,8 @@ def get_spark(
         # get Arrow batch transport instead of pickled rows (~2-3×).
         .config("spark.sql.execution.pythonUDF.arrow.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # static conf, read once at JVM launch (see module docstring)
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

@@ -1008,6 +1008,7 @@ def test_minhash_frames_equivalence(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from flink_note_spark.operators.dedup import (
+        MinhashFrames,
         dedup_against_index,
         minhash_frames,
         minhash_index_build,
@@ -1063,6 +1064,15 @@ def test_minhash_frames_equivalence(spark, sf_dir):
             docs.withColumnRenamed("text", "body"), "doc_id", "body",
             frames=frames, **kw
         )
+    # frames built with a pre-r14 params dict (no column keys) refuse
+    # with the same diagnostic, not a KeyError
+    legacy = MinhashFrames(
+        frames.shingles, frames.signatures, frames.sets,
+        {k: frames.params[k] for k in ("n", "num_hashes", "seed")},
+        frames.id_col,
+    )
+    with pytest.raises(ValueError, match="would not correspond"):
+        minhash_lsh_pairs(docs, "doc_id", "text", frames=legacy, **kw)
     with pytest.raises(ValueError, match="max_df"):
         minhash_lsh_pairs(
             docs, "doc_id", "text", max_df=50, frames=frames, **kw

@@ -11,8 +11,8 @@ exactly as the driver runs them, just over K× the data.
 
 Replication preserves the workload model (linear output growth):
 
-- documents: ids shift per replica; every word is suffixed with the
-  replica index (``scale_probe.replicate`` salt_text rationale — docs
+- documents: ids shift per replica; every word is suffixed with ``_``
+  and the replica index (``scale_probe.replicate`` salt_text rationale — docs
   inside one replica keep their near-dup/ngram relationships, docs
   across replicas share no grams, so pair counts grow K×, not K²×).
 - embeddings: ids shift per replica; every replica applies its own
@@ -77,7 +77,9 @@ def stage(spark, k: int, out_dir: str) -> None:
         F.array_join(
             F.transform(
                 F.split("text", " "),
-                lambda w: F.concat(w, F.col("__rep").cast("string")),
+                # non-digit separator: a bare index would let 'x'+'10'
+                # and 'x1'+'0' collide, sharing shingles across replicas
+                lambda w: F.concat(w, F.lit("_"), F.col("__rep").cast("string")),
             ),
             " ",
         ),

@@ -63,7 +63,8 @@ def replicate(df, k: int, shifts: dict[str, int], out_path: str,
     foreign keys consistent WITHIN a replica and disjoint ACROSS replicas,
     so join outputs grow linearly with K (the real-corpus-growth model).
 
-    ``salt_text`` suffixes every WORD with the replica index: documents
+    ``salt_text`` suffixes every WORD with ``_`` and the replica index
+    (the non-digit separator keeps 'x'+'10' and 'x1'+'0' apart): documents
     inside one replica keep their near-dup relationships, documents
     across replicas share no shingles — so the near-dup PAIR count grows
     linearly with K, modeling real corpus growth. (Naive replication
@@ -85,7 +86,7 @@ def replicate(df, k: int, shifts: dict[str, int], out_path: str,
             F.array_join(
                 F.transform(
                     F.split("text", " "),
-                    lambda w: F.concat(w, F.col("__rep").cast("string")),
+                    lambda w: F.concat(w, F.lit("_"), F.col("__rep").cast("string")),
                 ),
                 " ",
             ),
